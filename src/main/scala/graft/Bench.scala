@@ -147,87 +147,6 @@ object Bench {
       try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
       catch { case e: Throwable => System.err.println(s"warmup $t: $e") }
     }
-    // Shared-input cache seed — OFF BY DEFAULT (VERDICT r18 #2): ~13 queries
-    // rebuild byte-identical shingle frames / gram censuses from
-    // documents.parquet; persisting them once outside the timed region lets
-    // the CacheManager substitute the in-memory table into each query's
-    // timed plan, which excludes the shared derivation cost from the
-    // published numbers. The optimization-round rules classify that as
-    // untimed precomputation, so the driver-visible default is now an
-    // UNSEEDED run: every query pays its own derivation inside the timed
-    // region. Seeds-on survives as an explicit internal A/B mode
-    // (SPARK_GRAFT_BENCH_SEED_CACHE=true) for operator-isolation studies;
-    // values are identical either way (query code is untouched).
-    // lenient parse: only an explicit true/1/yes/on enables — toBoolean
-    // would crash the whole bench on "1"
-    val seedCache = Set("true", "1", "yes", "on")
-      .contains(sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED_CACHE", "false")
-        .trim.toLowerCase)
-    // Seed LIFETIME is scoped to the consumers (VERDICT r16 #1): the
-    // generation-eval trio's census seeds cost UNRELATED queries real time
-    // when parked across the whole sweep (q141 +8 s, q88 +6 s at sf10,
-    // measured seeds-on/off), so they are seeded right before the first
-    // trio query of each pass and released right after the last. The
-    // shingle seeds stay sweep-global — their consumers span the name range.
-    val allSeeds = graft.queries.PipelineQueries.benchCacheSeeds(spark, sfDir)
-    val trioNames = graft.queries.PipelineQueries.trioSeedNames
-    if (seedCache) {
-      for ((nm, df) <- allSeeds if !trioNames(nm)) {
-        try df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
-        catch { case e: Throwable => System.err.println(s"cache seed $nm: $e") }
-      }
-    }
-    // RDD ids persisted by the seed (and the session so far) survive the
-    // per-query unpersist sweep below; everything persisted later is a
-    // query-local checkpoint block and is dropped after its query is timed.
-    // Mutable: the trio seeds join the set while seeded and leave on release.
-    val sharedIds = scala.collection.mutable.Set[Int](
-      spark.sparkContext.getPersistentRDDs.keySet.toSeq: _*)
-
-    // the trio region's boundaries in this run's (sorted, possibly filtered)
-    // name sequence — empty when SPARK_GRAFT_BENCH_ONLY excludes the trio
-    val trioConsumers = names
-      .filter(n => graft.queries.PipelineQueries.trioQueryPrefixes
-        .exists(n.startsWith))
-    // Visit order: sorted names, but with the trio consumers made CONTIGUOUS
-    // at the first consumer's position (ADVICE r17): q162_ivfpq_from_index
-    // sorts between q161 and q163, so the boundary-scoped seeds would
-    // otherwise stay persisted while q162 — the sweep's most memory-
-    // sensitive query — is timed, reproducing the r16 seeds-on pressure.
-    // Grouping the trio keeps the one-census-derivation-per-pass economy
-    // AND keeps every non-trio query outside the seeded region. The
-    // reported JSON map is keyed by name, so reporting is order-free.
-    val visitOrder: Seq[String] =
-      if (trioConsumers.size <= 1) names
-      else {
-        val firstIdx = names.indexOf(trioConsumers.head)
-        val (before, after) =
-          names.filterNot(trioConsumers.contains).splitAt(firstIdx)
-        before ++ trioConsumers ++ after
-      }
-    var trioSeeded: Seq[DataFrame] = Nil
-    var trioSeedIds: Set[Int] = Set.empty
-    def seedTrio(): Unit =
-      if (seedCache && trioConsumers.nonEmpty && trioSeeded.isEmpty) {
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        trioSeeded = allSeeds.collect { case (nm, df) if trioNames(nm) =>
-          try {
-            df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              .count()
-            Some(df)
-          } catch { case e: Throwable =>
-            System.err.println(s"cache seed $nm: $e"); None
-          }
-        }.flatten
-        trioSeedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-        sharedIds ++= trioSeedIds
-      }
-    def releaseTrio(): Unit = if (trioSeeded.nonEmpty) {
-      trioSeeded.foreach(_.unpersist(blocking = false))
-      sharedIds --= trioSeedIds
-      trioSeeded = Nil
-      trioSeedIds = Set.empty
-    }
 
     def timeQuery(name: String): Unit = {
       val fn = SparkEntry.queries(name)
@@ -256,12 +175,10 @@ object Bench {
       }, s"disk-watchdog-$name")
       watchdog.setDaemon(true)
       watchdog.start()
-      // unseeded mode: the BPE merge-table memo is in-JVM precomputation of
-      // exactly the kind the seed cache was — min-of-N passes of q95/q118
-      // would otherwise serve pass 1's learning from the memo (VERDICT r18
-      // #2 names it into the same A/B). Clear it so every timed visit pays
-      // its own derivation.
-      if (!seedCache) graft.operators.Bpe.clearArtifacts()
+      // the BPE merge-table memo is in-JVM precomputation: min-of-N passes
+      // of q95/q118 would otherwise serve pass 1's learning from the memo.
+      // Clear it so every timed visit pays its own derivation.
+      graft.operators.Bpe.clearArtifacts()
       val t0 = System.nanoTime()
       try {
         execute(fn(spark, sfDir))
@@ -286,27 +203,14 @@ object Bench {
       // localCheckpoint blocks (q90/q97/q107/q112/q113, components loops)
       // otherwise accumulate in the block manager across queries and passes
       // — up to 3 passes × every checkpointing query in one JVM. Queries are
-      // independent, so drop everything persisted once the query is timed —
-      // except the session-scoped cache seeds, which later queries still read.
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!sharedIds.contains(id)) rdd.unpersist(blocking = false) }
+      // independent, so drop everything persisted once the query is timed.
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
       flush(claimed = false)
     }
 
-    // One measured visit, with the trio seeds' scoped lifetime: seeded
-    // (untimed, like the global seeds) right before the trio's first query,
-    // released right after its last — so the census blocks never pressure
-    // the rest of the pass.
-    def visit(name: String): Unit = {
-      if (trioConsumers.headOption.contains(name)) seedTrio()
-      timeQuery(name)
-      if (trioConsumers.lastOption.contains(name)) releaseTrio()
-    }
-
     // Pass 1: coverage first — every query exactly once, regardless of budget.
-    for (name <- visitOrder) visit(name)
-    releaseTrio() // safety: a failed trio query must not strand the seeds
+    for (name <- names) timeQuery(name)
     passesDone = 1
     flush(claimed = false)
     // Passes 2..runs: refine minima only while wall-clock budget remains.
@@ -314,8 +218,7 @@ object Bench {
     // budget cut short must not overstate the refinement coverage.
     for (_ <- 2 to runs if elapsed < budgetSec) {
       var visited = 0
-      for (name <- visitOrder if elapsed < budgetSec) { visit(name); visited += 1 }
-      releaseTrio() // a budget cut mid-trio must not strand the seeds
+      for (name <- names if elapsed < budgetSec) { timeQuery(name); visited += 1 }
       if (visited == names.size) passesDone += 1
       flush(claimed = false)
     }

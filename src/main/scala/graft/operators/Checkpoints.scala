@@ -170,7 +170,7 @@ private[graft] object Checkpoints {
   /** Mark one iteration round as a REUSE POINT. Three modes:
    *
    *   - default: `persist(MEMORY_AND_DISK)` — LAZY, so constructing an
-   *     unrolled-iteration plan (PlanDump, plan-shape specs, `explain`)
+   *     unrolled-iteration plan (ExplainQuery, plan-shape specs, `explain`)
    *     runs ZERO Spark jobs (VERDICT r12 #4; a non-eager `checkpoint`
    *     would NOT deliver this — under AQE even `eager = false` executes
    *     every intermediate query stage at RDD-creation time). The round

@@ -288,9 +288,8 @@ object Dedup {
    * pigeonhole theorem and the path x–rep_x–rep_y–y connects. One-hop
    * check, no transitive closure needed: (x, y) is connected iff
    * `rep_x == rep_y` (same class: both star to one rep) or
-   * `(rep_x, rep_y)` is an emitted candidate. ThirdDecadeSpec pins the
-   * contract; the sf100 measurement rides `tools.ThirdDecade`'s
-   * `-collapsed` modes.
+   * `(rep_x, rep_y)` is an emitted candidate. BlockPairBandsSpec pins the
+   * contract.
    *
    * `bandFn` maps (id, hash) → (id, band, band_key) — one of
    * [[blockPairBands]]/[[blockTripleBands]]/[[blockQuadBands]]. Returns
@@ -1235,9 +1234,17 @@ object Dedup {
 
   /** Dispatch knob: JVM system property (tests pin regimes per-call)
    * overrides the env (operators set deployment-wide budgets), overrides
-   * the measured default. */
-  private def gateKnob(prop: String, env: String, dflt: String): Long =
-    sys.props.get(prop).orElse(sys.env.get(env)).getOrElse(dflt).toLong
+   * the measured default. A value that is not an integer ≥ `least` is
+   * rejected by name: budgets and chunk counts must be positive (a zero
+   * budget would divide by zero in [[gateChunks]]); the counting floor
+   * may be 0 (never prefer counting). */
+  private def gateKnob(prop: String, env: String, dflt: String,
+                       least: Long = 1): Long = {
+    val raw = sys.props.get(prop).orElse(sys.env.get(env)).getOrElse(dflt)
+    raw.toLongOption.filter(_ >= least).getOrElse(
+      throw new IllegalArgumentException(
+        s"$prop (env $env) must be an integer >= $least, got '$raw'"))
+  }
 
   /** Postings census feeding the dispatch gates: total shingle occurrences,
    * one map-side-combinable aggregate over the corpus. */
@@ -1254,7 +1261,7 @@ object Dedup {
    * scale (q92: 1.82 s vs counting's 2.79 s even at sf0.1). */
   private def preferCounting(postings: Long): Boolean =
     postings < gateKnob("graft.prefix.min.postings",
-      "SPARK_GRAFT_PREFIX_MIN_POSTINGS", "2000000")
+      "SPARK_GRAFT_PREFIX_MIN_POSTINGS", "2000000", least = 0)
 
   /**
    * The prefix-filtered Jaccard join (header comment above): exact,
@@ -1382,50 +1389,12 @@ object Dedup {
   }
 
   /**
-   * Exact all-pairs Jaccard with PREFIX FILTERING — the candidate-pruned
-   * twin of [[allPairsJaccard]], value-identical by the prefix-filter
-   * theorem: order every shingle set by a global canonical order (document
-   * frequency ascending, shingle as tie-break) and index only each doc's
-   * PREFIX of `|A| - ceil(t*|A|) + 1` rarest shingles. For any pair with
-   * `jac >= t`, `|A∩B| >= t*|A∪B| >= t*|A|`, so the smallest common shingle
-   * sits within both prefixes (pigeonhole on the shared order) — the prefix
-   * equi-join cannot miss a qualifying pair, and the exact verification
-   * decides. The join cost drops from Σ df² over ALL shingles to Σ df_p²
-   * over prefix postings only — high-df (boilerplate) shingles sort LAST and
-   * fall out of every prefix, which is exactly where the quadratic blowup
-   * lived.
-   *
-   * WHEN TO USE: Zipfian vocabularies (real text), where most df mass sits in
-   * a few common shingles that prefixes exclude. On a flat/tiny vocabulary
-   * (like the synthetic test corpus) prefixes prune nothing, the candidate
-   * set approaches all-pairs, and the per-pair verification costs more than
-   * [[allPairsJaccard]]'s count-only join — measured 49 s vs 6 s at sf0.1,
-   * which is why q31 keeps the count formulation. Both are exact; pick by
-   * corpus shape. Pair-identity across thresholds is pinned in ScaleOpsSpec.
-   */
-  def prefixJaccard(docs: DataFrame, threshold: Double): DataFrame = {
-    val posts = docs.select(col("id"), size(col("shingles")).as("sz"),
-      explode(col("shingles")).as("sh"))
-    val dfreq = posts.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df"), col("sh"))
-    val prefix = posts.join(dfreq, "sh")
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
-    val a = prefix.select(col("id").as("a"), col("sh"))
-    val b = prefix.select(col("id").as("b"), col("sh"))
-    val candidates = a.join(b, "sh").where(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    verifyJaccard(candidates, docs, threshold)
-  }
-
-  /**
    * SimHash near-dup pairs over a (pre-filtered) corpus: 62-bit signatures, then
    * pairs within `maxHamming` bit flips. The signature computation is the scale
    * path (one narrow pass); pair enumeration here is all-pairs — the
-   * oracle-checked quadratic twin of [[simhashCandidates]], which bands the
-   * signature (pigeonhole) for corpus scale and is proven pair-identical in
-   * ScaleOpsSpec.
+   * oracle-checked quadratic twin of [[simhashCandidatesGuarded]], which
+   * bands the signature (pigeonhole) for corpus scale and is proven
+   * pair-identical below its bucket cap in ScaleOpsSpec.
    */
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     // feature hashes materialize once; the 62-bit fold then reuses the array
@@ -1451,23 +1420,9 @@ object Dedup {
       hashed.select(col("id"), TextFunctions.simhash62("hs").as("sig"))
   }
 
-  /**
-   * Scale-safe SimHash pair enumeration via pigeonhole banding: the 62-bit
-   * signature is split into `maxHamming + 1` contiguous chunks, so any pair
-   * within `maxHamming` bit flips must agree EXACTLY on at least one chunk
-   * (pigeonhole: `maxHamming` flips cannot touch all `maxHamming + 1` chunks).
-   * Candidates come from equi-joins on (chunk index, chunk value) — a corpus
-   * shuffle on the chunk key, never an all-pairs join — then the exact 62-bit
-   * Hamming distance verifies each candidate.
-   *
-   * Pair-identical to [[simhashPairs]] (the all-pairs oracle twin): banding
-   * only generates candidates, the Hamming verify is exact, and pigeonhole
-   * guarantees no qualifying pair is missed. Asserted in DedupSpec.
-   */
   /** The 62-bit signature split into `maxHamming + 1` contiguous chunks
    * (first `62 mod nChunks` chunks one bit wider); offsets are static, so
-   * shiftright/mask stay plain codegen'd literals. Shared by the raw and
-   * guarded candidate paths. */
+   * shiftright/mask stay plain codegen'd literals. */
   private def sigChunkExprs(maxHamming: Int): Seq[Column] = {
     val nChunks = maxHamming + 1
     val base = 62 / nChunks
@@ -1480,31 +1435,17 @@ object Dedup {
     }
   }
 
-  def simhashCandidates(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val chunkExprs = sigChunkExprs(maxHamming)
-    val sigs = simhashSigs(docs)
-    val chunks = sigs.select(col("id"), col("sig"),
-      posexplode(array(chunkExprs: _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_val")
-    val a = chunks.select(col("id").as("a"), col("sig").as("sig_a"),
-      col("chunk"), col("chunk_val"))
-    val b = chunks.select(col("id").as("b"), col("sig").as("sig_b"),
-      col("chunk"), col("chunk_val"))
-    a.join(b, Seq("chunk", "chunk_val"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /**
-   * [[simhashCandidates]] hardened for corpus scale — the q34/q90 candidate
-   * discipline applied to the simhash family (the r15 q33 rework: the raw
-   * chunk self-join measured 43× per decade at the second→third decade, the
-   * round's only confirmed quadratic). Same pigeonhole banding
-   * (`maxHamming + 1` chunks ⇒ any qualifying pair shares a chunk), but:
+   * Scale-safe SimHash pair enumeration via pigeonhole banding: the 62-bit
+   * signature is split into `maxHamming + 1` contiguous chunks, so any pair
+   * within `maxHamming` bit flips must agree EXACTLY on at least one chunk
+   * (pigeonhole: `maxHamming` flips cannot touch all `maxHamming + 1`
+   * chunks). Candidates come from equi-joins on (chunk index, chunk value),
+   * never an all-pairs join, then the exact 62-bit Hamming distance
+   * verifies each candidate. This is the q34/q90 candidate discipline
+   * applied to the simhash family (the r15 q33 rework: a raw, unguarded
+   * chunk self-join measured 43× per decade at the second→third decade,
+   * the round's only confirmed quadratic), so on top of the banding:
    *
    *   - candidates route through the GUARDED [[bucketedPairs]]: natural
    *     corpora concentrate signatures (templated text signs near-equal

@@ -420,6 +420,17 @@ object Similarity {
       // one narrow table read several ways (pair sides + norms + hot
       // correction + star verify): materialize once, the q31 pattern
       .localCheckpoint()
+    cosineFromPostings(post, minCosPpm, maxDf, sys.env.getOrElse(
+      "SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2", "1000000000").toLong)
+  }
+
+  /** The exact-core dispatch of [[tfidfCosinePairs]] over materialized
+   * postings; `stateBudget` is the Σ df² threshold above which the
+   * state-free merge-dot core runs (MergeDotCosineSpec passes 0 to drive
+   * the dispatch's own census into that core at test scale). */
+  private[graft] def cosineFromPostings(post: DataFrame, minCosPpm: Long,
+                                        maxDf: Long,
+                                        stateBudget: Long): DataFrame = {
     // r18 (VERDICT r17 #4): the count-per-pair core accumulates one
     // hash-agg key per distinct co-occurring pair — ~290M keys at sf100 on
     // q126's corpus, the measured dec3 ~20× spill — but BELOW that scale it
@@ -433,16 +444,18 @@ object Similarity {
     // colliding vocabulary, never observed, the counting core runs at any
     // scale, so values are exact either way). MergeDotCosineSpec pins the
     // two paths value-identical.
-    val cen = post.groupBy(col("term")).agg(count(lit(1)).as("d"))
+    val cen = post.groupBy(col("term"))
+      .agg(count(lit(1)).as("d"), max(col("df")).as("df"))
       .agg(coalesce(sum(col("d") * col("d")), lit(0L)).as("s2"),
         count(lit(1)).as("t"),
         count_distinct(xxhash64(col("term"))).as("h"),
-        coalesce(max(col("d")), lit(0L)).as("m")).head()
-    val stateBudget = sys.env.getOrElse(
-      "SPARK_GRAFT_COSINE_STATE_FREE_MIN_DF2", "1000000000").toLong
+        coalesce(max(col("df")), lit(0L)).as("m")).head()
     if (cen.getLong(0) > stateBudget && cen.getLong(1) == cen.getLong(2))
-      // hotFree rides the same census (max kept df ≤ cap ⟹ the hot set is
-      // empty ⟹ the exactly-once emission below is recall-safe)
+      // hotFree rides the same census. It reads the RAW df column, the one
+      // the hot set filters on: the wt > 0 prune can leave a term with
+      // fewer kept postings than its df, so max kept count ≤ cap does not
+      // prove the hot set empty (MergeDotCosineSpec pins that case). Max
+      // df ≤ cap ⟹ no hot term ⟹ exactly-once emission is recall-safe.
       mergeDotCosinePairs(post, minCosPpm, maxDf,
         hotFree = cen.getLong(3) <= maxDf)
     else {
@@ -472,16 +485,17 @@ object Similarity {
    * through this path at test scale.
    */
   /** @param hotFree caller-proven "the df cap does not bind on this postings
-   * frame" (max kept df ≤ maxDf — ridden on the dispatch census). When true,
-   * the candidate join emits each pair EXACTLY ONCE: a row survives only if
-   * its join hash equals `min_common_sorted(ka, kb)` — recall-safe because
-   * with no hot terms every common hash of the two arrays is a join key the
-   * cold equi-join produced, so the minimal one is always represented
-   * (collision rows included: equal hashes join regardless of the term
-   * strings, and duplicate emissions die in the retained distinct). The
-   * r19 probe measured multiplicity 19.6 on q126's corpus at sf10 with the
-   * distinct at 35.2 s of the 46.9 s pipeline — this filter shrinks that
-   * exchange by the multiplicity factor for one early-exit merge per row.
+   * frame" (max of the `df` column ≤ maxDf — ridden on the dispatch
+   * census). When true, the candidate join emits each pair EXACTLY ONCE: a
+   * row survives only if its join hash equals `min_common_sorted(ka, kb)` —
+   * recall-safe because with no hot terms every common hash of the two
+   * arrays is a join key the cold equi-join produced, so the minimal one is
+   * always represented (collision rows included: equal hashes join
+   * regardless of the term strings, and duplicate emissions die in the
+   * retained distinct). The r19 probe measured multiplicity 19.6 on q126's
+   * corpus at sf10 with the distinct at 35.2 s of the 46.9 s pipeline —
+   * this filter shrinks that exchange by the multiplicity factor for one
+   * early-exit merge per row.
    * When false (a binding cap — hot terms exist and a pair's minimal common
    * hash may be hot, i.e. never a join key), the full-multiplicity emission
    * stands: correctness first. */

@@ -33,45 +33,6 @@ object PipelineQueries {
     Tables.documents(s, d).where(pred)
       .select(col("doc_id").as("id"), shingleExpr(s, col("text"), n).as("shingles"))
 
-  /** Bench-harness cache seeds: the exact shingle frames the dedup /
-   * similarity queries rebuild internally (q31/q32/q33/q41/q51/q56/q90/q92/
-   * q112/q115 …). The harness persists these once before timing; Spark's
-   * CacheManager then substitutes the InMemoryRelation into every query
-   * whose analyzed plan contains the same subplan — query code and plans are
-   * untouched, and values are identical with or without the seed. The three
-   * variants below are the only shingle frames any query constructs, so the
-   * seed set is closed. */
-  def benchCacheSeeds(s: SparkSession, d: String): Seq[(String, DataFrame)] = Seq(
-    ("shingles_n2", docShingles(s, d, 2)),
-    ("shingles_n2_mod3", docShingles(s, d, 2, col("doc_id") % 3 === 0)),
-    ("shingles_n5", docShingles(s, d, 5)),
-    // q160/q161/q163 rebuild the identical (reference, candidate) fixture;
-    // the per-word md5 dropout derivation is their dominant cost
-    // (VERDICT r12), and the lazy-persist builder lets the CacheManager
-    // substitute this one seeded copy into all three plans
-    ("dropout_pairs", dropoutPairs(s, d)),
-    // the trio-shared orders-1..4 gram censuses (VERDICT r15 #7): the
-    // bench's per-query unpersist sweep would otherwise drop the reuse
-    // point q160 materialized before q161/q163 read it — seeding keeps
-    // the two census RDDs in the shared-id set, so the trio pays ONE
-    // census derivation per side per sweep
-    ("trio_census_ref", trioCensus(s, d, "reference")),
-    ("trio_census_cand", trioCensus(s, d, "candidate")))
-
-  /** The [[benchCacheSeeds]] entries consumed ONLY by the generation-eval
-   * trio (q160/q161/q163). The bench scopes these seeds' LIFETIME to the
-   * trio's region of each pass — seeded right before the first trio query,
-   * released right after the last — because parking them across the whole
-   * sweep costs unrelated queries real time through block-manager pressure
-   * (VERDICT r16 #1: q141 +8 s, q88 +6 s at sf10, measured seeds-on/off).
-   * The shingle seeds stay sweep-global: ~10 queries spread across the
-   * whole name range read them. */
-  val trioSeedNames: Set[String] =
-    Set("dropout_pairs", "trio_census_ref", "trio_census_cand")
-
-  /** Query-name prefixes of the trio that consumes [[trioSeedNames]]. */
-  val trioQueryPrefixes: Seq[String] = Seq("q160", "q161", "q163")
-
   /** Deterministic 5-annotator labeling of the documents table (the q59
    * in-query derivation pattern, so the DuckDB oracle rebuilds the SAME
    * labels): the true class is a 3-way n_chars bucket; annotator a flips
@@ -114,10 +75,9 @@ object PipelineQueries {
    * `persist` reuse point (NOT a localCheckpoint — construction must run
    * zero jobs, ConstructionJobsSpec): the per-word md5 is the expensive
    * part and every gram order re-reads the same pair table; because the
-   * cache is keyed on the PLAN, q160 and q161 (and a seeded bench copy)
-   * share one materialization — SeedSubstitutionSpec pins the
-   * InMemoryRelation in all three consumers' physical plans, and the
-   * reuse point is tracked so `Checkpoints.release` can free it
+   * cache is keyed on the PLAN, q160/q161/q163 share one materialization
+   * within a session — PersistLifecycleSpec pins the single cache entry —
+   * and the reuse point is tracked so `Checkpoints.release` can free it
    * (VERDICT r13 #3/#4). Repartitioned first: the per-word md5 roll and
    * the downstream multi-order gram explosion are the heavy per-row work
    * of these queries, and a compact corpus can arrive as ONE scan
@@ -142,8 +102,8 @@ object PipelineQueries {
    * census once instead of three times (VERDICT r15 #7; the
    * q31/q92/q112 docShingles-sharing discipline). A tracked lazy
    * `persist` reuse point like [[dropoutPairs]] itself: plan-keyed, so
-   * the three consumers (and a seeded bench copy) substitute one
-   * materialization; construction runs zero jobs
+   * the three consumers substitute one materialization; construction runs
+   * zero jobs
    * (ConstructionJobsSpec); releasable via `Checkpoints.release`. */
   private def trioCensus(s: SparkSession, d: String, side: String): DataFrame =
     graft.operators.Checkpoints.reusePoint(
@@ -470,12 +430,13 @@ object PipelineQueries {
     }),
 
     "q31_dedup_jaccard" -> ((s, d) => {
-      // exact n-gram Jaccard via the postings co-occurrence join (jac from
-      // counts, no per-pair array work). NOT the prefix-filtered variant:
-      // this corpus's vocabulary is tiny and uniformly common, so prefixes
-      // prune nothing and the candidate verify costs more than counting —
-      // measured 6s vs 49s at sf0.1 (prefixJaccard wins on Zipfian text,
-      // where high-df boilerplate falls out of every prefix).
+      // exact n-gram Jaccard via Dedup.allPairsJaccard, which dispatches on
+      // the postings census between the counting co-occurrence join (jac
+      // from counts, no per-pair array work) and the prefix-pigeonhole join
+      // with an inline hash gate. A plain prefix filter with a per-pair
+      // verify lost to counting here (49 s vs 6 s at sf0.1): this corpus's
+      // vocabulary is tiny and uniformly common, so prefixes alone prune
+      // nothing.
       // Df-cap vs oracle: the DuckDB twin stays the unguarded quadratic, so
       // the hash gate holds only while no shingle's df exceeds the 10k cap —
       // true at every oracle scale factor by construction (≤5000 docs). A

@@ -69,4 +69,40 @@ class MergeDotCosineSpec extends SparkSpec {
       assert(oncePath == counting, s"minCosPpm $minCos")
     }
   }
+
+  test("the dispatch keeps exactly-once emission exact when only the raw df binds the cap") {
+    import spark.implicits._
+    // the hot set is `df > maxDf` over the RAW document frequency, while
+    // the wt > 0 prune keeps fewer postings: a term in all 1100 docs with
+    // tf = 1 weighs 1000 div 1100 = 0 and is pruned, so only the three
+    // docs holding it twice keep a posting (kept d = 3 ≤ maxDf < df).
+    // Docs 2 and 3 share that hot term and one cold term, and the hot
+    // term's hash is the smaller, so their minimal common hash is never a
+    // join key: a dispatch that calls this corpus hot-free would drop the
+    // non-star pair (2, 3).
+    val Array(hot, cold) = Seq("alpha", "beta").toDF("t")
+      .select(col("t"), xxhash64(col("t")).as("k")).collect()
+      .sortBy(_.getLong(1)).map(_.getString(0))
+    val toks = (1L to 1100L).map {
+        case 1L => (1L, Seq(hot, hot))
+        case i if i <= 3L => (i, Seq(hot, hot, cold))
+        case i => (i, Seq(hot))
+      }.toDF("id", "terms")
+      .select(col("id"), explode(col("terms")).as("term"))
+    val maxDf = 10L
+    val post = Similarity.buildPostingsForTest(toks, maxDfDenom = 1)
+      .localCheckpoint()
+    val hotStats = post.where(col("term") === hot)
+      .agg(count(lit(1)), max(col("df"))).head()
+    assert(hotStats.getLong(0) == 3L && hotStats.getLong(1) == 1100L,
+      s"fixture must keep 3 postings of a df-1100 term, got $hotStats")
+
+    val counting = rows(Similarity.cappedCosineForTest(post, 0L, maxDf))
+    assert(counting.exists(r => r._1 == 2L && r._2 == 3L),
+      "the non-star pair must be in the counting core's output")
+    // stateBudget 0 routes the dispatch's own census to the merge-dot core
+    val dispatched = rows(Similarity.cosineFromPostings(post, 0L, maxDf,
+      stateBudget = 0L))
+    assert(dispatched == counting)
+  }
 }

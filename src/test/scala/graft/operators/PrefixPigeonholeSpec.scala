@@ -165,4 +165,17 @@ class PrefixPigeonholeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(cplan.contains("intersect_count_sorted"), cplan.take(2000))
   }
+
+  test("a non-positive or non-numeric gate knob is rejected by name") {
+    for (bad <- Seq("0", "-5", "abc")) {
+      sys.props("graft.inline.verify.max.postings") = bad
+      try {
+        val e = intercept[IllegalArgumentException](
+          Dedup.allPairsJaccard(docShingles, 0.5))
+        assert(e.getMessage.contains("graft.inline.verify.max.postings") &&
+          e.getMessage.contains("SPARK_GRAFT_INLINE_VERIFY_MAX_POSTINGS") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally sys.props -= "graft.inline.verify.max.postings"
+    }
+  }
 }

@@ -9,13 +9,14 @@ import graft.SparkEntry
 
 /**
  * Plan CONSTRUCTION must not run Spark jobs (VERDICT r12 #4): building a
- * query's DataFrame — what PlanDump, `explain`, and every plan-shape spec do
- * — is driver-side planning, and a builder that launches jobs to construct
- * its plan couples "look at the plan" to "execute the pipeline". The r12
- * offenders (q90's max-id guard `require`, bradleyTerry's census `head()`,
- * the q97/q145 half-split `head()`s, dawidSkene's per-item census) all moved
- * IN PLAN (`raise_error` branches / broadcast scalar joins) or to lazy
- * `persist` reuse points ([[graft.operators.Checkpoints.iterative]]).
+ * query's DataFrame — what `tools.ExplainQuery`, `explain`, and every
+ * plan-shape spec do — is driver-side planning, and a builder that launches
+ * jobs to construct its plan couples "look at the plan" to "execute the
+ * pipeline". The r12 offenders (q90's max-id guard `require`, bradleyTerry's
+ * census `head()`, the q97/q145 half-split `head()`s, dawidSkene's per-item
+ * census) all moved IN PLAN (`raise_error` branches / broadcast scalar
+ * joins) or to lazy `persist` reuse points
+ * ([[graft.operators.Checkpoints.iterative]]).
  *
  * What legitimately REMAINS eager is enumerated in `allowed`, one reason
  * each — three structural classes:
