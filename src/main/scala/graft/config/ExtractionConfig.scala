@@ -1,6 +1,6 @@
 package graft.config
 
-import java.io.{InputStream, StringReader}
+import java.io.StringReader
 import javax.xml.parsers.DocumentBuilderFactory
 import org.xml.sax.InputSource
 import scala.collection.mutable
@@ -114,12 +114,6 @@ object ExtractionConfig {
    */
   def fromXml(xml: String): ExtractionConfig =
     fromProperties(parseHadoopConfXml(xml.stripPrefix("\uFEFF")))
-
-  def fromStream(in: InputStream): ExtractionConfig = {
-    val s = scala.io.Source.fromInputStream(in, "UTF-8")
-    try fromXml(s.mkString)
-    finally s.close()
-  }
 
   def fromFile(path: String): ExtractionConfig = {
     val s = scala.io.Source.fromFile(path, "UTF-8")

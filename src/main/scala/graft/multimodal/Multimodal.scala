@@ -358,57 +358,6 @@ object Multimodal {
     }.toDF("doc_id", "phash")
   }
 
-  /**
-   * 128-bit perceptual hash — the [[Dedup.blockPairBands]] `blocks = 16`
-   * input for the THIRD corpus decade: word 1 is [[imagePhash]]'s 8×8
-   * block-average aHash bit-for-bit (so 64-bit results remain comparable
-   * across decades), word 2 a COLUMN-wise difference hash over the SAME
-   * cell sums: with the cell layout `cell = gx·8 + gy`, bit c compares
-   * cell c against the next cell DOWN the same image column (gy + 1,
-   * wrapping at the column end) — the dHash idea oriented vertically,
-   * capturing gradient structure the global-mean aHash ignores, so the
-   * two words carry largely independent content bits.
-   * Both words use the exact 128-bit cross-multiply compare (no doubles).
-   * Output: `(doc_id, phash: array<bigint>)` of 2 little-endian words,
-   * exactly the shape `blockPairBands(blocks = 16)` consumes.
-   */
-  def imagePhash128(media: Dataset[MediaRecord]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.modality == "image").mapPartitions { it =>
-      it.flatMap { r =>
-        Codecs.ppmDecode(r.bytes).map { img =>
-          val w = img.width; val h = img.height; val n = w * h
-          val cs = new Array[Long](64)
-          val cn = new Array[Long](64)
-          var ts = 0L
-          var p = 0
-          while (p < n) {
-            val g = (img.rgb(3 * p) & 0xff) + (img.rgb(3 * p + 1) & 0xff) +
-              (img.rgb(3 * p + 2) & 0xff)
-            val cell = (p % w * 8 / w) * 8 + (p / w * 8 / h)
-            cs(cell) += g; cn(cell) += 1; ts += g
-            p += 1
-          }
-          var a = 0L
-          var d = 0L
-          var c = 0
-          while (c < 64) {
-            if (cn(c) > 0 && mulGt(cs(c), n.toLong, ts, cn(c))) a |= 1L << c
-            // next cell DOWN the same image column (cell = gx*8 + gy, so
-            // c%8 is gy), wrapping at the column end:
-            // avg(c) > avg(nxt) ⟺ cs(c)·cn(nxt) > cs(nxt)·cn(c)
-            val nxt = (c / 8) * 8 + (c % 8 + 1) % 8
-            if (cn(c) > 0 && cn(nxt) > 0 && mulGt(cs(c), cn(nxt), cs(nxt), cn(c)))
-              d |= 1L << c
-            c += 1
-          }
-          (r.doc_id, Array(a, d))
-        }
-      }
-    }.toDF("doc_id", "phash")
-  }
-
   /** The oracle-gated REAL-decode query (q47). */
   def decodeQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -132,12 +132,6 @@ object Ivf {
   def cellOf(vec: Column, cents: Seq[Centroid]): Column =
     -array_max(scoredCells(vec, cents)).getField("negid")
 
-  /** Cosine similarity to the assigned (nearest) centroid — the score field
-   * of the same argmax [[cellOf]] takes the id from; one narrow expression,
-   * shared by SemDeDup-style survivor selection (q100). */
-  def centroidCos(vec: Column, cents: Seq[Centroid]): Column =
-    array_max(scoredCells(vec, cents)).getField("s")
-
   /** The `nprobe` nearest centroid ids, best first. */
   def probeCells(vec: Column, cents: Seq[Centroid], nprobe: Int): Column =
     transform(
@@ -180,7 +174,8 @@ object Ivf {
    * Spark jobs); every coarse centroid is additionally a member of its own
    * group, so no branch is empty. Output adds BOTH `cell` (the fine
    * assignment) and `ccos` (cosine to that centroid) from ONE argmax
-   * struct — [[assign]] + `centroidCos` evaluate the full scoring twice.
+   * struct — [[assign]] plus a separate score expression would evaluate
+   * the full scoring twice.
    *
    * With |cents| ≤ coarseN the hierarchy is degenerate (all groups are
    * singletons — the coarse argmax IS the assignment) and this equals the

@@ -89,7 +89,7 @@ object SqlSurface {
     shingled.createOrReplaceTempView("doc_shingles")
     Dedup.exact(docs, col("doc_id"), col("text"))
       .createOrReplaceTempView("dedup_exact")
-    val pairs = Dedup.verifyJaccardGated(
+    val pairs = Dedup.verifyJaccard(
       Dedup.minhashCandidates(shingled, k = 36, bands = 12), shingled, 0.8)
     pairs.createOrReplaceTempView("neardup_pairs")
     Dedup.duplicateSpans(

@@ -13,14 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * 100k-file table from re-listing footers for each of hundreds of daily
  * queries. The cache is per SparkSession (keyed on the session too, so a
  * restarted session re-infers) and parquet is self-describing — a REWRITTEN
- * table with a new schema needs a new session or an explicit
- * [[invalidateSchemaCache]]. */
+ * table with a new schema needs a new session. */
 object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       org.apache.spark.sql.types.StructType]()
-
-  def invalidateSchemaCache(): Unit = schemaCache.clear()
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"

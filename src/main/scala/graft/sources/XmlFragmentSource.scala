@@ -1,28 +1,17 @@
 package graft.sources
 
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.config.{ExtractionConfig, ExtractionRule}
-import graft.xml.FragmentScanner
+import graft.config.ExtractionConfig
+import graft.xml.{FragmentScanner, XmlExtraction}
 
 /**
- * DataSource V2 file source `graft-xml`: scans XML documents for configured
- * element fragments at the byte level — the Spark-native re-expression of the
+ * File source `graft-xml`: scans XML documents for configured element
+ * fragments at the byte level — the Spark-native re-expression of the
  * reference's custom RecordReader (`SeqXmlRecordReader.java:162-328`), whose
  * whole point was extracting fragments WITHOUT parsing full documents
  * (`README.md:3`).
@@ -36,24 +25,19 @@ import graft.xml.FragmentScanner
  * Output schema: `docId string, seq long, rule string, xml string` — one row
  * per extracted fragment, `seq` = stream position (document order).
  *
- * Scan-level optimizations, in the DSv2 contract:
- *  - one input partition per file: a document is the indivisible unit (the
- *    reference's `isSplitable = false`), parallelism = file count;
- *  - column pruning ([[SupportsPushDownRequiredColumns]]): e.g. a count over
- *    fragments never materializes the fragment bodies;
- *  - `rule = '...'` filter pushdown ([[SupportsPushDownFilters]]): evaluated
- *    during the scan, before rows are emitted. The scanner always runs with
- *    the FULL rule set (rule interplay — overlap precedence, in-fragment
- *    swallowing — is part of the semantics) and drops non-matching fragments
- *    at the source.
+ * The scan is [[XmlExtraction.corpusFromXmlFiles]] (listing, docIds and
+ * partitions are Spark's text source's; a file is never split) followed by
+ * [[FragmentScanner.scan]] with the FULL rule set (rule interplay — overlap
+ * precedence, in-fragment swallowing — is part of the semantics). Only the
+ * required columns are emitted, and `rule = '...'` equalities are applied in
+ * the scan; every other filter is left to Spark.
  */
-class XmlFragmentSource extends TableProvider with DataSourceRegister {
+class XmlFragmentSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "graft-xml"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XmlFragmentSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new XmlFragmentTable(properties.asScala.toMap)
+  override def createRelation(sqlContext: SQLContext,
+                              parameters: Map[String, String]): BaseRelation =
+    new XmlFragmentRelation(sqlContext, parameters("path"),
+      ExtractionConfig.fromFile(parameters("config")))
 }
 
 object XmlFragmentSource {
@@ -64,177 +48,33 @@ object XmlFragmentSource {
     StructField("xml", StringType, nullable = false)))
 }
 
-private[sources] class XmlFragmentTable(props: Map[String, String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-xml:${props.getOrElse("path", "?")}"
-  override def schema(): StructType = XmlFragmentSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XmlFragmentScanBuilder(
-      options.get("path"),
-      ExtractionConfig.fromFile(options.get("config")).rules.toIndexedSeq)
-}
+private[sources] class XmlFragmentRelation(val sqlContext: SQLContext, path: String,
+                                           config: ExtractionConfig)
+    extends BaseRelation with PrunedFilteredScan {
+  override def schema: StructType = XmlFragmentSource.schema
+  // the scan node's name in plans and explain output
+  override def toString: String =
+    s"graft-xml path=$path rules=${config.rules.map(_.element).mkString(",")}"
+  private def ruleEquality(f: Filter): Option[String] =
+    Some(f).collect { case EqualTo("rule", v: String) => v }
+  // buildScan hands back the inner query's InternalRows
+  override def needConversion: Boolean = false
+  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
+    filters.filter(ruleEquality(_).isEmpty)
 
-private[sources] class XmlFragmentScanBuilder(path: String, rules: IndexedSeq[ExtractionRule])
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = XmlFragmentSource.schema
-  private var ruleEqs: Set[String] = Set.empty
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rest) = filters.partition {
-      case EqualTo("rule", _: String) => true
-      case _ => false
-    }
-    pushed = accepted
-    // ALL pushed equalities are intersected: `rule='a' AND rule='b'` has two
-    // distinct values, the intersection is empty, and the scan emits no rows —
-    // matching what Spark would compute above the scan
-    ruleEqs = accepted.collect { case EqualTo(_, v: String) => v }.toSet
-    rest // everything else is evaluated by Spark above the scan
+  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
+    val spark = sqlContext.sparkSession
+    import spark.implicits._
+    val rules = config.rules.toIndexedSeq
+    // all equalities must hold: two distinct values keep no fragment
+    val ruleEqs = filters.flatMap(ruleEquality).toSet
+    XmlExtraction.corpusFromXmlFiles(spark, path).as[(String, String)].flatMap {
+      case (docId, xml) =>
+        FragmentScanner.scan(xml, rules).iterator
+          .map(f => (docId, f.seq, rules(f.ruleIndex).element, f.xml))
+          .filter(t => ruleEqs.forall(_ == t._3))
+    }.toDF(schema.fieldNames.toIndexedSeq: _*)
+      .select(requiredColumns.map(col).toIndexedSeq: _*)
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = new XmlFragmentScan(path, rules, required, ruleEqs)
-}
-
-private[sources] class XmlFragmentScan(path: String, rules: IndexedSeq[ExtractionRule],
-                                       required: StructType, ruleEqs: Set[String])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-xml path=$path rules=${rules.map(_.element).mkString(",")}" +
-      (if (ruleEqs.nonEmpty) s" pushedRules=${ruleEqs.mkString(",")}" else "")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // Driver-side listing with the session's Hadoop conf. Files are packed
-    // into shared partitions up to spark.sql.files.maxPartitionBytes (with
-    // the standard openCostInBytes padding per file), so a 100 TB layout of
-    // millions of small documents doesn't produce millions of partitions —
-    // but a file is never split (the document is the indivisible unit, the
-    // reference's `isSplitable = false`).
-    val session = SparkSession.active
-    val hadoopConf = session.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hadoopConf)
-    val globbed: Array[org.apache.hadoop.fs.FileStatus] =
-      Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val files = globbed.flatMap { st =>
-      if (st.isDirectory) {
-        // recursive listing below each matched directory
-        val it = fs.listFiles(st.getPath, true)
-        val buf = Array.newBuilder[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) buf += it.next()
-        buf.result()
-      } else Array(st)
-    }.filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-        && !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
-
-    import org.apache.spark.network.util.JavaUtils.byteStringAsBytes
-    val maxBytes =
-      byteStringAsBytes(session.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val openCost =
-      byteStringAsBytes(session.conf.get("spark.sql.files.openCostInBytes", "4m"))
-
-    val partitions = Array.newBuilder[InputPartition]
-    val current = Array.newBuilder[String]
-    var currentBytes = 0L
-    var currentN = 0
-    def flush(): Unit = if (currentN > 0) {
-      partitions += XmlFilesPartition(current.result())
-      current.clear(); currentBytes = 0L; currentN = 0
-    }
-    files.foreach { st =>
-      val cost = st.getLen + openCost
-      if (currentN > 0 && currentBytes + cost > maxBytes) flush()
-      current += st.getPath.toString
-      currentBytes += cost
-      currentN += 1
-    }
-    flush()
-    partitions.result()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Hadoop Configuration is not Serializable; ship the driver conf's
-    // resolved properties and rebuild it on executors so filesystem settings
-    // and credentials (fs.defaultFS, S3A keys, ...) survive the trip.
-    val hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-    val confProps: Array[(String, String)] =
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-    new XmlFragmentReaderFactory(rules, required.fieldNames, ruleEqs, confProps)
-  }
-}
-
-private[sources] case class XmlFilesPartition(files: Array[String]) extends InputPartition
-
-private[sources] class XmlFragmentReaderFactory(
-    rules: IndexedSeq[ExtractionRule], fields: Array[String], ruleEqs: Set[String],
-    confProps: Array[(String, String)])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new XmlFragmentReader(partition.asInstanceOf[XmlFilesPartition].files,
-      rules, fields, ruleEqs, confProps)
-}
-
-private[sources] class XmlFragmentReader(
-    files: Array[String], rules: IndexedSeq[ExtractionRule], fields: Array[String],
-    ruleEqs: Set[String], confProps: Array[(String, String)])
-    extends PartitionReader[InternalRow] {
-
-  private lazy val hadoopConf = {
-    val c = new Configuration(false)
-    confProps.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  private def scanFile(file: String): IndexedSeq[graft.xml.Fragment] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(hadoopConf)
-    val in = fs.open(p)
-    val content =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val all = FragmentScanner.scan(content, rules)
-    if (ruleEqs.isEmpty) all
-    // single pushed value: equality; 2+ distinct values: empty intersection
-    else if (ruleEqs.size == 1) all.filter(f => rules(f.ruleIndex).element == ruleEqs.head)
-    else IndexedSeq.empty
-  }
-
-  private var fileIdx = -1
-  private var docId: String = _
-  private var fragments: IndexedSeq[graft.xml.Fragment] = IndexedSeq.empty
-  private var idx = -1
-
-  override def next(): Boolean = {
-    idx += 1
-    while (idx >= fragments.length) {
-      fileIdx += 1
-      if (fileIdx >= files.length) return false
-      val file = files(fileIdx)
-      docId = file.substring(file.lastIndexOf('/') + 1)
-      fragments = scanFile(file)
-      idx = 0
-    }
-    true
-  }
-
-  override def get(): InternalRow = {
-    val f = fragments(idx)
-    new GenericInternalRow(fields.map {
-      case "docId" => UTF8String.fromString(docId)
-      case "seq" => f.seq
-      case "rule" => UTF8String.fromString(rules(f.ruleIndex).element)
-      case "xml" => UTF8String.fromString(f.xml)
-    }.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = ()
 }

@@ -43,16 +43,16 @@ object StreamingExtraction {
 
   /**
    * Streaming variant of [[XmlExtraction.corpusFromXmlFiles]]: every file that
-   * lands in `dir` becomes one document row with a deterministic docId.
+   * lands in `dir` becomes one document row with the same docId
+   * ([[XmlExtraction.fileDocId]]). The stream lists `dir` itself, not its
+   * subdirectories.
    */
   def streamingCorpus(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .option("wholetext", true)
       .option("maxFilesPerTrigger", 1000)
       .text(dir)
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("docId"),
-        col("value").as("xml"))
+      .select(XmlExtraction.fileDocId, col("value").as("xml"))
 
   /**
    * End-to-end streaming extraction: attach with

@@ -58,16 +58,7 @@ object StructuredExtraction {
    * behavior; here a substring filter is `contains`, equality is `===`.)
    */
   def bookQuery(spark: SparkSession, path: String, idSubstring: String): DataFrame =
-    readXml(spark, path, rowTag = "store")
-      .select(col("_name").as("store"), col("address.phone").cast("string").as("phone"),
-        explode(col("inventory")).as("inv"))
-      .select(col("store"), col("phone"),
-        col("inv._month").as("month"), col("inv._day").cast("string").as("day"),
-        explode(col("inv.books.book")).as("book"))
-      .where(col("book._id").contains(idSubstring))
-      .select(col("store"), col("phone"), col("month"), col("day"),
-        col("book._id").as("book_id"),
-        col("book._inStock").cast("string").as("in_stock"))
+    inventoryQuery(spark, path).where(col("book_id").contains(idSubstring))
 
   /** Render structured rows in the reference's delimited shape (trailing
    * delimiter, space for null) for golden comparison. */

@@ -1,6 +1,6 @@
 package graft.xml
 
-import java.io.{ByteArrayInputStream, StringReader}
+import java.io.ByteArrayInputStream
 import javax.xml.parsers.DocumentBuilderFactory
 import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
 
@@ -20,13 +20,17 @@ final case class ExtractedTuple(docId: String, seq: Long, order: Int, value: Str
  * The parity extraction engine: config-driven XML fragment extraction → XPath
  * projection → fill-down pivot → delimited rows, re-expressed on Spark.
  *
- * Two equivalent formulations are provided (tested for equality):
+ * Every formulation projects through one per-partition [[XPathEvaluator]]: its
+ * `document` scans a whole document with the full rule set and yields its
+ * [[ExtractedTuple]]s in stream order. Two equivalent formulations are
+ * provided on top of it (tested for equality):
  *
  *  - [[XmlExtraction.extractRows]] — **fused, shuffle-free** (default): scan + XPath +
- *    streaming pivot fold inside one `mapPartitions`, one document at a time. This is
- *    the 100 TB path: a document is the unsplittable unit (same as the reference's
- *    non-splittable input format, `XmlExtractor.java:64-67`), so parallelism comes from
- *    document count and NO shuffle is needed — every transform is narrow.
+ *    streaming pivot fold ([[XmlExtraction.fillDown]]) inside one `mapPartitions`,
+ *    one document at a time. This is the 100 TB path: a document is the
+ *    unsplittable unit (same as the reference's non-splittable input format,
+ *    `XmlExtractor.java:64-67`), so parallelism comes from document count and NO
+ *    shuffle is needed — every transform is narrow.
  *
  *  - [[XmlExtraction.tuples]] + [[XmlExtraction.pivotRows]] — the **distributed
  *    formulation**: an explicit tuple Dataset followed by a window fill-down
@@ -37,23 +41,19 @@ final case class ExtractedTuple(docId: String, seq: Long, order: Int, value: Str
  */
 object XmlExtraction {
 
-  /** Column names of the pivoted output: c0..c{n-1}. */
-  def columnNames(config: ExtractionConfig): Seq[String] =
-    (0 until config.nrOfColumns).map(i => s"c$i")
+  // ----------------------------------------------------------- Corpus readers
+  /** A file document's deterministic docId: the last segment of the URI-escaped
+   * `input_file_name()` (`a b.xml` → `a%20b.xml`). The reference keys documents by
+   * random UUID (`SeqXmlRecordReader.java:171`, SURVEY.md §2.10 #8). */
+  private[graft] def fileDocId: Column =
+    regexp_extract(input_file_name(), "([^/]+)$", 1).as("docId")
 
-  // ---------------------------------------------------------------------------
-  // Corpus readers
-  // ---------------------------------------------------------------------------
-
-  /** Read a directory/glob of whole XML documents, one row per file, with a
-   * deterministic docId (the file name). The reference keys documents by random UUID
-   * (`SeqXmlRecordReader.java:171`, SURVEY.md §2.10 #8) — we make ids deterministic
-   * for testability and document the divergence. */
+  /** The one batch reader of XML files (`graft-xml` scans its rows): a directory,
+   * file or glob, one row per file with [[fileDocId]]. Spark's text source lists
+   * directories recursively, skips `_`/`.` files and never splits a file. */
   def corpusFromXmlFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", true).text(path)
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)$", 1).as("docId"),
-        col("value").as("xml"))
+    spark.read.option("wholetext", true).option("recursiveFileLookup", true).text(path)
+      .select(fileDocId, col("value").as("xml"))
 
   /** Read a reference-format SequenceFile corpus (`Text` uuid → `Text` xml document,
    * `CreateSequenceFile.java:37-51`). */
@@ -77,17 +77,10 @@ object XmlExtraction {
       .saveAsSequenceFile(path)
   }
 
-  // ---------------------------------------------------------------------------
-  // Fused path (default, shuffle-free)
-  // ---------------------------------------------------------------------------
-
-  /**
-   * Full extraction in one narrow pass: for each document, scan fragments, evaluate
-   * XPaths, and fold the tuples through the reference's streaming pivot (carry-forward
-   * column array + row trigger on the last column, `XmlExtractor.java:150-175`).
-   *
-   * Output schema: docId, seq (trigger tuple's stream position), c0..c{n-1}.
-   */
+  // --------------------------------------- Fused path (default, shuffle-free)
+  /** Full extraction in one narrow pass, one document at a time: scan + XPath
+   * ([[XPathEvaluator.document]]), then the reference's streaming pivot ([[fillDown]]).
+   * Output schema: docId, seq (trigger tuple's stream position), c0..c{n-1}. */
   def extractRows(corpus: DataFrame, config: ExtractionConfig): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -95,28 +88,28 @@ object XmlExtraction {
     val nrCols = config.nrOfColumns
     val rows = corpus.select("docId", "xml").as[(String, String)].mapPartitions { docs =>
       val eval = new XPathEvaluator(rules)
-      docs.flatMap { case (docId, xml) =>
-        val columns = new Array[String](nrCols) // never cleared between rows: fill-down
-        FragmentScanner.scan(xml, rules).iterator.flatMap { frag =>
-          eval.tuples(frag).flatMap { case (order, value) =>
-            if (order >= 0 && order < nrCols) {
-              columns(order) = value
-              if (order == nrCols - 1)
-                Some((docId, frag.seq, columns.clone().toSeq))
-              else None
-            } else None
-          }
-        }
-      }
+      docs.flatMap { case (docId, xml) => fillDown(eval.document(docId, xml), nrCols) }
     }.toDF("docId", "seq", "cols")
     val cols = (0 until nrCols).map(i => col("cols").getItem(i).as(s"c$i"))
     rows.select(col("docId") +: col("seq") +: cols: _*)
   }
 
-  // ---------------------------------------------------------------------------
-  // Distributed formulation (explicit tuples + window fill-down)
-  // ---------------------------------------------------------------------------
+  /** The reference's streaming pivot over one document's tuples: a carry-forward
+   * column array, never cleared between rows (fill-down), and one row (docId,
+   * trigger seq, a copy of the columns) at each tuple of the last column
+   * (`XmlExtractor.java:150-175`). Orders outside the columns are ignored. */
+  private[graft] def fillDown(tuples: Iterator[ExtractedTuple],
+                              nrCols: Int): Iterator[(String, Long, Seq[String])] = {
+    val columns = new Array[String](nrCols)
+    tuples.flatMap { t =>
+      if (t.order >= 0 && t.order < nrCols) {
+        columns(t.order) = t.value
+        if (t.order == nrCols - 1) Some((t.docId, t.seq, columns.toSeq)) else None
+      } else None
+    }
+  }
 
+  // ------------- Distributed formulation (explicit tuples + window fill-down)
   /** Scan + XPath projection producing the intermediate tuple Dataset — the Spark
    * equivalent of the reference's map output (`XmlExtractor.java:111-112`). */
   def tuples(corpus: DataFrame, config: ExtractionConfig): Dataset[ExtractedTuple] = {
@@ -125,20 +118,14 @@ object XmlExtraction {
     val rules = config.rules.toIndexedSeq
     corpus.select("docId", "xml").as[(String, String)].mapPartitions { docs =>
       val eval = new XPathEvaluator(rules)
-      docs.flatMap { case (docId, xml) =>
-        FragmentScanner.scan(xml, rules).iterator.flatMap { frag =>
-          eval.tuples(frag).map { case (order, value) =>
-            ExtractedTuple(docId, frag.seq, order, value)
-          }
-        }
-      }
+      docs.flatMap { case (docId, xml) => eval.document(docId, xml) }
     }
   }
 
   /**
    * XPath projection over pre-scanned fragments — the bridge from the
-   * `graft-xml` DataSource V2 scan ([[graft.sources.XmlFragmentSource]],
-   * schema `docId, seq, rule, xml`) into the tuple pipeline: feed the result
+   * `graft-xml` source ([[graft.sources.XmlFragmentSource]], schema
+   * `docId, seq, rule, xml`) into the tuple pipeline: feed the result
    * to [[pivotRows]] for the fill-down pivot.
    */
   def tuplesFromFragments(fragments: DataFrame, config: ExtractionConfig): Dataset[ExtractedTuple] = {
@@ -150,11 +137,7 @@ object XmlExtraction {
       .as[(String, Long, String, String)].mapPartitions { rows =>
         val eval = new XPathEvaluator(rules)
         rows.flatMap { case (docId, seq, rule, xml) =>
-          idxByElement.get(rule).iterator.flatMap { ri =>
-            eval.tuples(Fragment(ri, seq, xml)).map { case (order, value) =>
-              ExtractedTuple(docId, seq, order, value)
-            }
-          }
+          eval.project(docId, idxByElement.get(rule).iterator.map(Fragment(_, seq, xml)))
         }
       }
   }
@@ -178,10 +161,7 @@ object XmlExtraction {
       .drop("order")
   }
 
-  // ---------------------------------------------------------------------------
-  // Output formatting / sink
-  // ---------------------------------------------------------------------------
-
+  // ------------------------------------------------- Output formatting / sink
   /**
    * Render pivoted rows to the reference's delimited-text shape: every column followed
    * by the output delimiter (INCLUDING the last), null/empty column → single space
@@ -190,8 +170,7 @@ object XmlExtraction {
    * delimiter).
    */
   def formatLines(rows: DataFrame, config: ExtractionConfig): DataFrame = {
-    val pieces: Seq[Column] = columnNames(config).flatMap { c =>
-      val v = col(c)
+    val pieces: Seq[Column] = (0 until config.nrOfColumns).map(i => col(s"c$i")).flatMap { v =>
       Seq(when(v.isNull || v === "", lit(" ")).otherwise(v), lit(config.outputDelimiter))
     }
     rows.select(concat(pieces: _*).as("line"))
@@ -201,10 +180,7 @@ object XmlExtraction {
   def run(corpus: DataFrame, config: ExtractionConfig): DataFrame =
     formatLines(extractRows(corpus, config), config)
 
-  // ---------------------------------------------------------------------------
-  // XPath evaluation (per-partition, compiled once)
-  // ---------------------------------------------------------------------------
-
+  // -------------------------- XPath evaluation (per-partition, compiled once)
   /**
    * Per-partition XPath machinery, two engines behind one interface:
    *
@@ -219,7 +195,7 @@ object XmlExtraction {
    *    nothing; per-expression errors are swallowed (reference prints +
    *    drops, `:114-117`).
    */
-  private final class XPathEvaluator(rules: IndexedSeq[ExtractionRule]) extends Serializable {
+  private[graft] final class XPathEvaluator(rules: IndexedSeq[ExtractionRule]) extends Serializable {
     // per rule: Right(stax) when the whole rule compiles to the subset
     private val engines: IndexedSeq[Either[IndexedSeq[(Int, XPathExpression)], StaxRuleEvaluator]] = {
       lazy val xpath = XPathFactory.newInstance().newXPath()
@@ -238,7 +214,18 @@ object XmlExtraction {
       f.newDocumentBuilder()
     }
 
-    def tuples(frag: Fragment): Seq[(Int, String)] = {
+    /** One whole document, scanned with the full rule set and projected: its
+     * tuples in stream order. */
+    def document(docId: String, xml: String): Iterator[ExtractedTuple] =
+      project(docId, FragmentScanner.scan(xml, rules).iterator)
+
+    /** The tuples of each fragment of one document, in the order given. */
+    def project(docId: String, fragments: Iterator[Fragment]): Iterator[ExtractedTuple] =
+      fragments.flatMap(f => tuples(f).iterator.map { case (order, value) =>
+        ExtractedTuple(docId, f.seq, order, value)
+      })
+
+    private def tuples(frag: Fragment): Seq[(Int, String)] = {
       try {
         val unordered = engines(frag.ruleIndex) match {
           case Right(stax) => stax.eval(frag.xml)

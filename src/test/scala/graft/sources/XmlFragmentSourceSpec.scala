@@ -2,14 +2,17 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.RowDataSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 
 import graft.SparkSpec
 import graft.config.ExtractionConfig
 import graft.xml.{FragmentScanner, XmlExtraction}
 
-/** The graft-xml DataSource V2: fragment parity with the scanner, pruning,
- * rule-filter pushdown, and the bridge into the pivot pipeline. */
+/** The graft-xml source: fragment parity with the scanner, pruning,
+ * rule-filter pushdown, listing and docIds shared with
+ * `XmlExtraction.corpusFromXmlFiles`, and the bridge into the pivot pipeline. */
 class XmlFragmentSourceSpec extends SparkSpec {
 
   private lazy val dir = {
@@ -25,8 +28,27 @@ class XmlFragmentSourceSpec extends SparkSpec {
     f.toString
   }
 
-  private def read() =
-    spark.read.format("graft-xml").option("config", configPath).load(dir)
+  private def readPath(p: String) =
+    spark.read.format("graft-xml").option("config", configPath).load(p)
+
+  private def read() = readPath(dir)
+
+  private def docIds(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.select("docId").distinct().collect().map(_.getString(0)).toSet
+
+  /** a/InventorySoho.xml, a/deep/InventoryBanks.xml, b/InventorySoho2.xml and
+   * a `_SUCCESS` marker at the root */
+  private lazy val nested = {
+    val root = Files.createTempDirectory("graft-dsv2-nested")
+    val subA = Files.createDirectory(root.resolve("a"))
+    val subB = Files.createDirectory(root.resolve("a").resolve("deep"))
+    val subC = Files.createDirectory(root.resolve("b"))
+    Files.writeString(subA.resolve("InventorySoho.xml"), resourceText("InventorySoho.xml"))
+    Files.writeString(subB.resolve("InventoryBanks.xml"), resourceText("InventoryBanks.xml"))
+    Files.writeString(subC.resolve("InventorySoho2.xml"), resourceText("InventorySoho.xml"))
+    Files.writeString(root.resolve("_SUCCESS"), "") // marker files are skipped
+    root
+  }
 
   test("fragments match FragmentScanner run directly on each document") {
     val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
@@ -44,9 +66,10 @@ class XmlFragmentSourceSpec extends SparkSpec {
 
   test("rule equality filter is pushed into the scan") {
     val df = read().where(col("rule") === "book")
-    val explained = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(explained.contains("pushedRules=book"), explained)
+    // handled by the scan: Spark does not evaluate it again above the scan
+    val scan = df.queryExecution.sparkPlan.collectFirst { case s: RowDataSourceScanExec => s }
+    assert(scan.exists(_.handledFilters.contains(EqualTo("rule", "book"))),
+      df.queryExecution.sparkPlan)
     val rules = df.select("rule").distinct().collect().map(_.getString(0)).toSeq
     assert(rules == Seq("book"))
   }
@@ -66,29 +89,45 @@ class XmlFragmentSourceSpec extends SparkSpec {
     assert(!scanLine.contains("xml#") || scanLine.contains("ReadSchema"), scanLine)
   }
 
-  test("nested directory trees list recursively, globs expand, small files pack") {
-    val root = Files.createTempDirectory("graft-dsv2-nested")
-    val subA = Files.createDirectory(root.resolve("a"))
-    val subB = Files.createDirectory(root.resolve("a").resolve("deep"))
-    val subC = Files.createDirectory(root.resolve("b"))
-    Files.writeString(subA.resolve("InventorySoho.xml"), resourceText("InventorySoho.xml"))
-    Files.writeString(subB.resolve("InventoryBanks.xml"), resourceText("InventoryBanks.xml"))
-    Files.writeString(subC.resolve("InventorySoho2.xml"), resourceText("InventorySoho.xml"))
-    Files.writeString(root.resolve("_SUCCESS"), "") // marker files are skipped
-
-    def readPath(p: String) =
-      spark.read.format("graft-xml").option("config", configPath).load(p)
-
+  test("nested trees list recursively, globs expand, files never split") {
+    val root = nested
     val all = readPath(root.toString)
     val docs = all.select("docId").distinct().collect().map(_.getString(0)).toSet
     assert(docs == Set("InventorySoho.xml", "InventoryBanks.xml", "InventorySoho2.xml"))
-    // three small files fit one maxPartitionBytes budget → packed together
-    assert(all.rdd.getNumPartitions == 1)
+    // Spark's file-source split policy: the partitions of its own text reader
+    // over the same path, and a file (a document) is never split
+    val textPartitions = spark.read.option("wholetext", true)
+      .option("recursiveFileLookup", true).text(root.toString).rdd.getNumPartitions
+    assert(all.rdd.getNumPartitions == textPartitions)
+    val partitionsPerDoc = all.select(col("docId"), spark_partition_id().as("p")).distinct()
+      .groupBy("docId").count().collect().map(_.getLong(1))
+    assert(partitionsPerDoc.length == 3 && partitionsPerDoc.forall(_ == 1))
 
     // glob limits to the matching subtree (a/* = the direct file + deep/, recursed)
     val globbed = readPath(s"$root/a/*")
     val globbedDocs = globbed.select("docId").distinct().collect().map(_.getString(0)).toSet
     assert(globbedDocs == Set("InventorySoho.xml", "InventoryBanks.xml"))
+  }
+
+  test("corpusFromXmlFiles over a nested tree extracts the rows of every document") {
+    val config = ExtractionConfig.fromXml(resourceText("ExtractInventory.xml"))
+    val expected = {
+      import spark.implicits._
+      XmlExtraction.run(Seq("InventorySoho.xml", "InventoryBanks.xml", "InventorySoho.xml")
+        .map(n => (n, resourceText(n))).toDF("docId", "xml"), config)
+    }.collect().map(_.getString(0)).sorted.toSeq
+    val got = XmlExtraction.run(XmlExtraction.corpusFromXmlFiles(spark, nested.toString), config)
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(got == expected)
+    assert(got.nonEmpty)
+  }
+
+  test("a file name that needs escaping gets the same docId as corpusFromXmlFiles") {
+    val d = Files.createTempDirectory("graft-dsv2-space")
+    Files.writeString(d.resolve("a b.xml"), resourceText("InventorySoho.xml"))
+    val viaCorpus = docIds(XmlExtraction.corpusFromXmlFiles(spark, d.toString))
+    assert(docIds(readPath(d.toString)) == viaCorpus)
+    assert(viaCorpus == Set("a%20b.xml")) // Spark URI-escapes input_file_name()
   }
 
   test("conflicting pushed rule equalities yield the empty intersection") {

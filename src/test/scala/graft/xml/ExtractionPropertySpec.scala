@@ -8,8 +8,9 @@ import graft.config.{ExtractionConfig, ExtractionRule, XPathProjection}
 
 /**
  * Property-based invariants over randomly generated documents (SURVEY.md §5
- * test plan #3), exercised through the scanner + fused pivot fold directly
- * (single-JVM — the Spark formulations are proven equal in the golden spec):
+ * test plan #3), exercised through the production per-document projection
+ * (scanner + StAX XPath) and fill-down fold directly (single-JVM — the Spark
+ * formulations are proven equal in the golden spec):
  *
  *  - row count == number of trigger fragments (fragments of the rule carrying
  *    the last column);
@@ -59,27 +60,12 @@ class ExtractionPropertySpec extends SparkSpec {
   private def expectedRows(d: Doc): Seq[(String, String)] =
     d.sections.flatMap { case (anc, children) => children.map(c => (anc, c)) }
 
-  /** Run scanner + fused fold (same logic as XmlExtraction.extractRows). */
+  /** The shipped per-document projection and fold, as
+   * [[XmlExtraction.extractRows]] runs them on each document. */
   private def extractLocal(xml: String): Seq[(String, String)] = {
-    val rules = config.rules.toIndexedSeq
-    val frags = FragmentScanner.scan(xml, rules)
-    val columns = new Array[String](2)
-    val out = Seq.newBuilder[(String, String)]
-    frags.foreach { frag =>
-      val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
-        .parse(new java.io.ByteArrayInputStream(frag.xml.getBytes("UTF-8")))
-      val xp = javax.xml.xpath.XPathFactory.newInstance().newXPath()
-      config.rules(frag.ruleIndex).xpaths.foreach { p =>
-        val nodes = xp.compile(p.xpath)
-          .evaluate(doc, javax.xml.xpath.XPathConstants.NODESET)
-          .asInstanceOf[org.w3c.dom.NodeList]
-        if (nodes.getLength > 0) {
-          columns(p.order) = (0 until nodes.getLength).map(nodes.item(_).getNodeValue).mkString
-          if (p.order == 1) out += ((columns(0), columns(1)))
-        }
-      }
-    }
-    out.result()
+    val eval = new XmlExtraction.XPathEvaluator(config.rules.toIndexedSeq)
+    XmlExtraction.fillDown(eval.document("doc", xml), config.nrOfColumns)
+      .map { case (_, _, cols) => (cols(0), cols(1)) }.toSeq
   }
 
   test("row count == #trigger fragments; fill-down carries last ancestor; arity constant") {
